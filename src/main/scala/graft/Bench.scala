@@ -81,7 +81,7 @@ object Bench {
     val robots = Synth.robots(spark, nHosts)
     val seeds = Synth.seeds(spark, nHosts)
     val dict = Synth.escoLabels().map(l => (l.concept_uri, l.preferred_label))
-    // durable mode: every round commits frontier/seen/results/lineage to
+    // durable mode: every round commits frontier/results/lineage to
     // the snapshot dir (Iceberg-emulation parquet) INSIDE the timed
     // window — the measured number is write-ahead crawl throughput. A
     // fresh dir per call: this times the commit path, not a resume.

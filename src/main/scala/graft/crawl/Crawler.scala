@@ -1,10 +1,11 @@
 package graft.crawl
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.extract.EscoMatcher
 import graft.frontier.Frontier
 import graft.model._
+import graft.util.Parallel
 
 /** The driver-side round loop: iterative BFS with a persistent queue —
   * the reference's crawl lifecycle (/root/reference/crawler.py:4-36 +
@@ -12,11 +13,17 @@ import graft.model._
   * Datasets (SURVEY.md §2.9: no Structured Streaming — queue reordering
   * and the global politeness budget fit batch rounds).
   *
-  * Each round is one `Round.run` Dataset pipeline; between rounds the
-  * frontier / seen / results / lineage tables are committed to a
-  * `Snapshot` (Iceberg emulation), so `resume` continues exactly from the
-  * last committed round — interrupted and uninterrupted runs produce
-  * identical final state (tested by CrawlerSpec).
+  * Each round is one `Round.run` Dataset pipeline. In snapshot mode each
+  * round commits to a `Snapshot` (Iceberg emulation): the next frontier
+  * (replaced), the round's results and lineage slices (appended) and a
+  * manifest; the seen set is the snapshot's view over the results
+  * slices, never written. The frontier write, the results write and the
+  * seen-shard growth run at the same time, the lineage write follows the
+  * frontier write (it carries the frontier's row count), and the
+  * manifest's atomic move is last. So `resume` continues exactly from the
+  * last committed round, whatever step a crash interrupted — interrupted
+  * and uninterrupted runs produce identical final state (tested by
+  * CrawlerSpec and CrashResumeSpec).
   */
 object Crawler {
 
@@ -93,7 +100,9 @@ object Crawler {
       // selected side shuffles (see Round.run step 3)
       bucketedFetch: Boolean = false,
       // continue from an explicit state (Recrawl's expiry path) instead
-      // of seeding/snapshot-resuming; seeds are ignored when set
+      // of seeding/snapshot-resuming; seeds are ignored when set. Not
+      // combinable with a snapshot: a snapshot's seen set is the view of
+      // its own results slices, which holds none of the start state's
       startState: Option[CrawlState] = None,
       // seen-filter backend for the prefilter legs: false = Bloom shards
       // (incremental bitwise-OR growth), true = cuckoo shards
@@ -117,6 +126,9 @@ object Crawler {
       retainResults: Boolean = true)
       (implicit spark: SparkSession)
       : (CrawlState, Dataset[CrawlResult], Dataset[Lineage]) = {
+    require(startState.isEmpty || snapshot.isEmpty,
+      "startState and snapshot are exclusive: the snapshot's seen set " +
+        "would drop the start state's after the first round")
     import spark.implicits._
     val dict = EscoMatcher.broadcastDict(spark, dictLabels)
 
@@ -151,10 +163,8 @@ object Crawler {
       lineageSlices += s.read(r, "lineage").as[Lineage]
     }
 
-    val roundLog = sys.env.get("GRAFT_ROUND_LOG").contains("1")
     var continue = true
     while (continue && state.round < maxRounds) {
-      val t0 = System.nanoTime()
       // first Bloom round (fresh start OR snapshot resume): shards are
       // built once from the full seen set here, then grown incrementally
       // per round below — never rebuilt from scratch again
@@ -184,28 +194,11 @@ object Crawler {
         // frontier are checkpointed separately, so plans stay flat either
         // way, and the caches hold the same bytes the checkpoint would.
         val slice = out.results
-        // this round's fetches are disjoint from seen by construction
-        // (the round anti-joins before fetching) → plain union, no
-        // distinct shuffle needed. The union is re-checkpointed FLAT
-        // every round: a lazy-union cadence (compact every 4) was
-        // A/B-tested in round 3 and REGRESSED — between compactions the
-        // two per-round anti-joins re-scan every slice's 32 checkpoint
-        // partitions (~320 extra task launches per round), costing more
-        // wall time than the one small rewrite job the laziness saves
-        // (same conclusion as the round-2 mmap-churn diagnosis, with
-        // job-count data). The seen set is url_hash only (8 B/url); at
-        // 10^10-frontier scale the co-partitioned Bloom shards carry the
-        // prefilter and this exact set lives in an Iceberg table updated
-        // by appending the round's slice instead.
-        val newSeen = state.seenHashes
-          .unionByName(slice.select("url_hash").toDF())
-          .coalesce(spark.sparkContext.defaultParallelism)
-          .localCheckpoint(true)
         // incremental shard growth: OR the round slice's shards into the
         // running set (see CrawlState.seenShards) — O(slice), not O(seen).
         // Cuckoo backend: insertAll (insertion isn't associative like
         // Bloom's OR, so the slice cogroups into the shard table instead)
-        val newShards = state.seenShards.map(prev =>
+        def growShards() = state.seenShards.map(prev =>
           (if (cuckooSeen)
             graft.seen.CuckooShard.insertAll(prev,
               slice.select("url_hash").toDF(), cuckooParams)
@@ -215,15 +208,10 @@ object Crawler {
               slice.select("url_hash").toDF(), bloomParams)))
             .localCheckpoint(true))
         val newTotal = state.totalFetched + out.fetchedCount
-        // materialize the next frontier ONCE (it feeds every join of the
-        // next round) — the LAZY checkpoint is triggered by the count()
-        // below, so materialization + counting is a single job (an eager
-        // checkpoint ran one job and the count a second). new_links =
-        // entries enqueued for the next round (discovered + deferred +
-        // retries), recorded on the lowest-numbered partition's row.
-        val fr = out.nextFrontier.toDF().localCheckpoint(false)
-        val enqueued = fr.count()
-        val patchedLineage = {
+        // new_links = entries enqueued for the next round (discovered +
+        // deferred + retries), recorded on the lowest-numbered
+        // partition's row
+        def lineageWith(enqueued: Long) = {
           val rows = out.lineage.collect() // LocalRelation — driver-local
           val minP = rows.map(_.partition_id).min
           spark.createDataset(rows.map(r =>
@@ -233,27 +221,64 @@ object Crawler {
         val prev = state
         snapshot match {
           case Some(s) =>
-            // append-only commit: ONLY this round's results/lineage slice
-            // is written (the manifest accumulates slice paths) — write
-            // volume per round is O(slice), not O(total); frontier and
-            // seen are full-state replacements like Iceberg overwrites
-            s.write(state.round,
-              tables = Map("frontier" -> fr, "seen" -> newSeen),
+            // each state table is materialised exactly once: the next
+            // frontier is written straight from its plan (its row count,
+            // new_links, observed on that write), the results slice is
+            // written from the round's cache, and the seen set is no
+            // table at all (Snapshot: the url_hash view of the results
+            // slices). The three independent jobs run at the same time;
+            // the lineage slice needs new_links, so it follows the
+            // frontier write; the manifest commit comes last.
+            val r = state.round
+            val (frontierSchema, enqueued, lineageSchema, resultsSchema,
+                newShards) = Parallel.scope { p =>
+              val frontierAndLineage = p.fork {
+                val rows = Observation()
+                val fs = s.put(r, "frontier", out.nextFrontier.toDF()
+                  .observe(rows, count(lit(1)).as("n")))
+                val enqueued = rows.get("n").asInstanceOf[Long]
+                (fs, enqueued, s.put(r, "lineage", lineageWith(enqueued).toDF()))
+              }
+              val results = p.fork(s.put(r, "results", slice.toDF()))
+              val shards = p.fork(growShards())
+              val (fs, n, ls) = frontierAndLineage.join()
+              (fs, n, ls, results.join(), shards.join())
+            }
+            s.commit(r, tables = Map("frontier" -> frontierSchema),
               counters = Map("total_fetched" -> newTotal,
                 "round_fetched" -> out.fetchedCount,
                 "new_links" -> enqueued),
-              appends = Map("results" -> slice.toDF(),
-                "lineage" -> patchedLineage.toDF()))
+              appends = Map("results" -> resultsSchema,
+                "lineage" -> lineageSchema))
             // hold the parquet-backed slice (not the cache, which is
             // released below); plans stay flat — one scan per slice
-            resultSlices += s.readSlice(state.round, "results").as[CrawlResult]
-            lineageSlices += s.readSlice(state.round, "lineage").as[Lineage]
-            state = CrawlState(state.round + 1,
-              s.read(state.round, "frontier").as[FrontierEntry],
-              s.read(state.round, "seen"), newTotal, newShards)
+            resultSlices += s.readSlice(r, "results").as[CrawlResult]
+            lineageSlices += s.readSlice(r, "lineage").as[Lineage]
+            state = CrawlState(r + 1,
+              s.read(r, "frontier").as[FrontierEntry],
+              s.read(r, "seen"), newTotal, newShards)
           case None =>
+            // this round's fetches are disjoint from seen by construction
+            // (the round anti-joins before fetching) → plain union, no
+            // distinct shuffle needed. The union is re-checkpointed FLAT
+            // every round: a lazy-union cadence (compact every 4) was
+            // A/B-tested in round 3 and REGRESSED — between compactions
+            // the two per-round anti-joins re-scan every slice's 32
+            // checkpoint partitions (~320 extra task launches per round),
+            // costing more wall time than the one small rewrite job the
+            // laziness saves.
+            val newSeen = state.seenHashes
+              .unionByName(slice.select("url_hash").toDF())
+              .coalesce(spark.sparkContext.defaultParallelism)
+              .localCheckpoint(true)
+            val newShards = growShards()
+            // materialize the next frontier ONCE (it feeds every join of
+            // the next round) — the LAZY checkpoint is triggered by the
+            // count() below, so materialization + counting is one job
+            val fr = out.nextFrontier.toDF().localCheckpoint(false)
+            val enqueued = fr.count()
             if (retainResults) resultSlices += slice
-            lineageSlices += patchedLineage
+            lineageSlices += lineageWith(enqueued)
             state = CrawlState(state.round + 1, fr.as[FrontierEntry],
               newSeen, newTotal, newShards)
         }
@@ -275,11 +300,6 @@ object Crawler {
         // between reps; specs run at fixture scale)
         out.release()
         if (snapshot.isDefined || !retainResults) out.releaseResults()
-        if (roundLog) System.err.println(
-          f"[crawl] round ${state.round - 1}%3d fetched=${out.fetchedCount}%7d " +
-          f"total=${state.totalFetched}%8d secs=${(System.nanoTime() - t0) / 1e9}%7.2f " +
-          f"matchCalls=${graft.extract.EscoMatcher.callCount.sumThenReset()}%8d " +
-          graft.Prof.snapshotAndReset())
       }
     }
     val allResults =

@@ -64,7 +64,6 @@ object Round {
       bucketedFetch: Boolean = false)
       (implicit spark: SparkSession): Output = {
     import spark.implicits._
-    val tRoundStart = System.nanoTime()
 
     // 1. dedup against the seen set. Bloom path = flag-and-verify (the
     //    classic Bloom join): the filter FLAGS each frontier row
@@ -150,7 +149,7 @@ object Round {
       uris.map(u => dict.value.labelOf.getOrElse(u, u)).sorted)
     // hash each token exactly once; simhash + shingle/minhash derive from
     // the primitive hash array (no per-shingle strings, no boxed sets)
-    val signatures = udf((text: String) => graft.Prof.time("sig") {
+    val signatures = udf { (text: String) =>
       val toks = graft.dedup.Dedup.tokens(text)
       val hs = graft.dedup.Dedup.tokenHashes(toks)
       (graft.dedup.Dedup.simhashOfHashes(hs),
@@ -158,22 +157,14 @@ object Round {
           graft.dedup.Dedup.shingleHashesOf(hs)).toSeq,
         graft.text.TextStats.detectLang(text),
         toks.length)
-    })
+    }
     // `ex` is referenced twice (text, links); after projection collapse
     // both land in one Project and whole-stage codegen's subexpression
-    // elimination evaluates the UDF once per row (the round log's
-    // extract-call counter pins calls == fetched pages)
+    // elimination evaluates the UDF once per row
     val enriched = (if (bucketedFetch)
         pages.alias("p").join(sel, col("f.url") === col("p.url"))
       else pages.alias("p")
         .join(broadcast(sel), col("f.url") === col("p.url")))
-      .transform { df =>
-        if (sys.env.get("GRAFT_PLAN_LOG").contains("1")) System.err.println(
-          s"[plan round $roundNo] fetch join:\n" +
-          df.queryExecution.sparkPlan.toString.take(
-            sys.env.get("GRAFT_PLAN_FULL").fold(2000)(_ => 20000)))
-        df
-      }
       // column discipline: the corpus `text` column is NOT selected —
       // extraction recomputes it from html (byte-identity is the tested
       // invariant), and an unused heavy column here would be decompressed
@@ -208,13 +199,6 @@ object Round {
         col("sig._2").as("minhash"), col("sig._3").as("lang_pred"),
         col("sig._4").as("n_tokens"))
       .as[CrawlResult]
-    if (sys.env.get("GRAFT_PLAN_LOG").contains("1")) {
-      val p = results.queryExecution.executedPlan.toString
-      System.err.println(s"[plan round $roundNo] results UDF counts: " +
-        Seq("UDF", "extract", "matchUris", "anonfun").map(k =>
-          s"$k=${p.sliding(k.length).count(_ == k)}").mkString(" ") +
-        s" planLen=${p.length}")
-    }
 
     // per-partition lineage counters (SDK_CRAWLER_STATISTICS analog).
     // Collecting them (≤ one row per partition) IS the round's single
@@ -237,13 +221,6 @@ object Round {
       .collect()
     val lineage = spark.createDataset(lineageRows.toSeq)
     val fetchedCount = lineageRows.map(_.fetch_count).sum
-    if (sys.env.get("GRAFT_ROUND_LOG").contains("1")) System.err.println(
-      f"[round $roundNo%3d] fetch+extract action: " +
-      f"${(System.nanoTime() - tRoundStart) / 1e9}%7.2f s")
-    if (sys.env.get("GRAFT_PLAN_LOG").contains("1")) System.err.println(
-      s"[plan round $roundNo] results EXECUTED:\n" +
-      results.queryExecution.executedPlan.toString
-        .split("== Initial Plan ==").head.take(6000))
 
     // 5. link scrape → new frontier candidates (same-host only,
     //    apify.js:156-163), depth+1, dedup'd against seen ∪ this round.

@@ -104,15 +104,7 @@ object EscoMatcher extends Serializable {
     * distinct concept uris in first-hit order, then sort for determinism
     * (reference sorts skill lists before compare,
     * tests/test_compare_extracted_skills.py:29-33). */
-  /** Diagnostic: total matchUris invocations in this JVM (local mode —
-    * driver and executors share it). Lets the crawl round log report
-    * calls/page and catch plan shapes that re-evaluate extraction.
-    * Gated + striped (graft.Prof): unconditionally CAS-ing a shared
-    * AtomicLong from every task thread is measurable contention. */
-  val callCount = new java.util.concurrent.atomic.LongAdder()
-
   def matchUris(dict: Dict, text: String): Seq[String] = {
-    if (graft.Prof.enabled) callCount.increment()
     val tokens = normTokens(text)
     if (tokens.isEmpty) return Nil
     val first = dict.firstTokens
@@ -139,7 +131,7 @@ object EscoMatcher extends Serializable {
 
   /** UDF pair over a broadcast dict: text → sorted concept uris / labels. */
   def matcherUdf(bc: Broadcast[Dict]): Column => Column = {
-    val f = udf((text: String) => graft.Prof.time("match")(matchUris(bc.value, text)))
+    val f = udf((text: String) => matchUris(bc.value, text))
     c => f(c)
   }
 

@@ -216,10 +216,9 @@ object TextExtract extends Serializable {
   }
 
   // ---- Column UDFs ----
-  val extractUdf = udf((b: Array[Byte]) => graft.Prof.time("extract")(extract(b)))
-  val linksUdf = udf((b: Array[Byte]) => graft.Prof.time("links")(links(b)))
-  val extractAllUdf = udf((b: Array[Byte]) =>
-    graft.Prof.time("extract")(extractAll(b)))
+  val extractUdf = udf((b: Array[Byte]) => extract(b))
+  val linksUdf = udf((b: Array[Byte]) => links(b))
+  val extractAllUdf = udf((b: Array[Byte]) => extractAll(b))
 
   def extractText(c: Column): Column = extractUdf(c)
   def extractLinks(c: Column): Column = linksUdf(c)

@@ -236,10 +236,10 @@ object Canonical extends Serializable {
   }
 
   // ---- Column-level UDFs (registered for codegen-friendly pipelines) ----
-  val canonicalizeUdf = udf((s: String) => graft.Prof.time("canon")(canonicalize(s)))
+  val canonicalizeUdf = udf((s: String) => canonicalize(s))
   val hostUdf = udf((s: String) => host(s))
   val hash64Udf = udf((s: String) => hash64(s))
-  val resolveUdf = udf((base: String, href: String) => graft.Prof.time("resolve")(resolve(base, href)))
+  val resolveUdf = udf((base: String, href: String) => resolve(base, href))
 
   def canonical(c: Column): Column = canonicalizeUdf(c)
   def urlHost(c: Column): Column = hostUdf(c)

@@ -36,11 +36,16 @@ object Checkpoints {
     * Enforced (throws IllegalArgumentException) rather than documented,
     * because the failure mode of a mistaken release is a delayed,
     * nondeterministic "checkpoint block not found" in whoever shares the
-    * input. CheckpointsSpec pins all three behaviors. */
+    * input. CheckpointsSpec pins all three behaviors.
+    *
+    * The blocks are dropped without `RDD.unpersist`'s per-call WARN that
+    * a locally checkpointed RDD "cannot be recomputed after
+    * unpersisting": dropping exactly those blocks is this method's job,
+    * so the line carried no signal (a crawl logged one per round). */
   def release(df: Dataset[_]): Unit = {
     val analyzed = df.queryExecution.analyzed
     strip(analyzed) match {
-      case r: LogicalRDD => r.rdd.unpersist(blocking = false)
+      case r: LogicalRDD => org.apache.spark.CheckpointBlocks.drop(r.rdd)
       case other =>
         val embedded = other.collect { case r: LogicalRDD => r }
         require(embedded.isEmpty,

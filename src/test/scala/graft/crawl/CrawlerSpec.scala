@@ -139,6 +139,18 @@ class CrawlerSpec extends SparkSpec {
     assert(perRound(0) > 0, s"round 0 enqueued nothing: $perRound")
   }
 
+  test("a start state is rejected with a snapshot: the snapshot's seen " +
+      "view holds only its own results slices") {
+    val dir = Files.createTempDirectory("graft-snap-start").toString
+    val start = Crawler.initialState(seeds, pages)(spark)
+    val e = intercept[IllegalArgumentException](Crawler.crawl(pages, robots,
+      seeds, dictLabels, maxRounds = 40, roundMs = 4000L,
+      snapshot = Some(new Snapshot(dir)(spark)),
+      startState = Some(start))(spark))
+    assert(e.getMessage.contains("startState and snapshot"))
+    assert(new Snapshot(dir)(spark).latest() === -1)
+  }
+
   test("idempotence: one more round after exhaustion fetches nothing") {
     val (state, _, _) = full
     import graft.extract.EscoMatcher

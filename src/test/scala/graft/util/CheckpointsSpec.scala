@@ -1,5 +1,11 @@
 package graft.util
 
+import java.util.concurrent.ConcurrentLinkedQueue
+import org.apache.logging.log4j.LogManager
+import org.apache.logging.log4j.core.{LogEvent, Logger}
+import org.apache.logging.log4j.core.appender.AbstractAppender
+import org.apache.logging.log4j.core.config.Property
+import scala.jdk.CollectionConverters._
 import graft.SparkSpec
 
 /** Checkpoints.release must actually free localCheckpoint storage (the
@@ -67,5 +73,38 @@ class CheckpointsSpec extends SparkSpec {
     }.head
     Checkpoints.release(ckpt)
     assert(!spark.sparkContext.getPersistentRDDs.contains(rddId))
+  }
+
+  /** Messages logged at WARN or above while `body` runs. */
+  private def warnings(body: => Unit): Seq[String] = {
+    val got = new ConcurrentLinkedQueue[String]()
+    val app = new AbstractAppender("checkpoints-spec", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel.isMoreSpecificThan(org.apache.logging.log4j.Level.WARN))
+          got.add(e.getMessage.getFormattedMessage)
+    }
+    app.start()
+    val root = LogManager.getRootLogger.asInstanceOf[Logger]
+    root.addAppender(app)
+    try body finally { root.removeAppender(app); app.stop() }
+    got.asScala.toSeq
+  }
+
+  test("release drops a checkpoint's blocks without the unpersist WARN") {
+    def rddOf(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.analyzed.collect {
+        case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
+      }.head
+    // the capture sees the WARN that RDD.unpersist logs for a checkpoint
+    val control = rddOf(spark.range(100).toDF("v").localCheckpoint(true))
+    assert(warnings(control.unpersist())
+      .exists(_.contains("locally checkpointed")),
+      "RDD.unpersist logged no WARN: the capture is blind")
+    val ckpt = spark.range(100).toDF("v").localCheckpoint(true)
+    val id = rddOf(ckpt).id
+    val logged = warnings(Checkpoints.release(ckpt))
+    assert(!logged.exists(_.contains("locally checkpointed")), logged)
+    assert(!spark.sparkContext.getPersistentRDDs.contains(id))
   }
 }
